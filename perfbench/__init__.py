@@ -1,0 +1,5 @@
+"""Benchmark of record: pages table in, Linked Connections files out.
+
+``python3 perfbench/run.py --workload <name> --seed <n> --seconds <s> --trace <0|1>``
+runs one workload and prints one JSON result line; see perfbench/README.md.
+"""
